@@ -465,29 +465,6 @@ def md5_hash64(col: Column, seed: int) -> Column:
     ).cast("long")
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str,
-    tokens: Column,
-    num_hashes: int = 64,
-    hash_fn=_xxhash_family,
-    tok: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig array<long>) — num_hashes column-min aggregates over one
-    token explosion; the k hash functions are ``hash_fn(token, i)``
-    (default xxhash64 seeded by index), so signatures are deterministic
-    across runs and — with ``md5_hash64`` — across engines. Callers that
-    already hold the (id, token) set pass it via ``tok`` — sharing the
-    explode+distinct pass instead of re-scanning the corpus."""
-    if tok is None:
-        tok = token_sets(docs, id_col, tokens)
-    mins = [
-        F.min(hash_fn(F.col("token"), i)).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    sig = tok.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 16,

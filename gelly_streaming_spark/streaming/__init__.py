@@ -4,7 +4,8 @@ harness, keyed-state operators, and incremental graph algorithms.
 Every batch operator in this engine is written against DataFrame
 operations valid in both batch and streaming mode; this package adds the
 pieces that are streaming-*only*: replay/rate sources, available-now
-drivers, explicit keyed state (applyInPandasWithState), and foreachBatch
+drivers, keyed state held by Spark's native stateful aggregates and
+watermarked dedup (running degrees, streaming distinct), and foreachBatch
 refinement loops for the iterative algorithms Structured Streaming can't
 express in-plan.
 """

@@ -1,53 +1,37 @@
-"""Custom stateful streaming operators (keyed state).
+"""Stateful streaming operators (keyed state).
 
 Reference parity: the reference's continuous properties keep per-key
 managed state and re-emit on every update — ``getDegrees`` is a keyed
 stateful counter (REF:src/main/java/org/apache/flink/graph/streaming/
-SimpleEdgeStream.java:~150-175 [H]), ``globalAggregate`` a single keyed
-state (REF:.../SimpleEdgeStream.java:~450 [M]). Spark equivalent:
-``applyInPandasWithState`` — Arrow-batched pandas state functions over
-grouped streaming data. Emission is per micro-batch, not per record
-(semantic delta D1, SURVEY.md §7.4).
+SimpleEdgeStream.java:~150-175 [H]). Spark equivalent for an algebraic
+counter: a streaming ``groupBy().agg()``, whose running partial
+aggregates Catalyst keeps in the executor-side state store — no user
+code on the hot path, no Python worker. Emission is per micro-batch,
+not per record (semantic delta D1, SURVEY.md §7.4).
 
-Scale notes: state lives in the executor-side state store (RocksDB
-provider in production), partitioned by the group key — per-vertex
-counters shard across the cluster exactly like the reference's keyed
-state shards across TaskManagers. No driver involvement.
+Scale notes: the state store (RocksDB provider in production) is
+partitioned by the group key — per-vertex counters shard across the
+cluster exactly like the reference's keyed state shards across
+TaskManagers. No driver involvement.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from gelly_streaming_spark.operators.graphstream import GraphStream
 
 
 def running_degrees(edges: DataFrame) -> DataFrame:
-    """A1 getDegrees, streaming-native: per-vertex running degree,
-    re-emitted each micro-batch the vertex appears in.
+    """A1 getDegrees, streaming-native: per-vertex running degree
+    (``id, degree``), re-emitted in update mode each micro-batch the
+    vertex appears in; the final state equals the batch degrees.
 
-    Unlike the stock ``GraphStream.degrees()`` (aggregation in
-    update/complete mode), this keeps an explicit per-key counter — the
-    template for arbitrary non-algebraic per-vertex state (adjacency
-    sketches, samplers)."""
-    ids = edges.select(F.explode(F.array(F.col("src"), F.col("dst"))).alias("id"))
-
-    def update(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        cnt = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            cnt += len(pdf)
-        state.update((cnt,))
-        yield pd.DataFrame({"id": [key[0]], "degree": [cnt]})
-
-    return ids.groupBy("id").applyInPandasWithState(
-        update,
-        outputStructType="id long, degree long",
-        stateStructType="cnt long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
+    This is ``GraphStream.degrees()`` run as a stream: the explode →
+    ``groupBy(id).count`` plan becomes a stateful hash aggregate whose
+    per-vertex counts live in the state store. ``id`` keeps the edge id
+    type (``long`` for the engine's sources)."""
+    return GraphStream(edges).degrees()
 
 
 def streaming_distinct(edges: DataFrame, watermark_delay: str = "0 seconds",

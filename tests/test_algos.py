@@ -262,6 +262,15 @@ def test_global_triangle_strategies_agree(spark, sf_dir):
     assert counts["joins"] > 0
 
 
+def test_forced_broadcast_kernel_respects_limit(spark):
+    """A forced broadcast_kernel collects at most broadcast_limit+1 edges
+    to the driver and rejects a larger edge set instead of collecting it
+    all (G1 has 7 canonical edges)."""
+    gs = GraphStream(fixture_graph(spark, "g1"))
+    with pytest.raises(ValueError, match="broadcast_limit"):
+        triangle_count(gs, strategy="broadcast_kernel", broadcast_limit=4)
+
+
 # ---------------------------------------------------------------------------
 # PageRank (q56 extension)
 # ---------------------------------------------------------------------------

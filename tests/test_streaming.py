@@ -18,6 +18,8 @@ from gelly_streaming_spark.streaming import (
     streaming_distinct,
 )
 
+pytestmark = pytest.mark.streaming
+
 
 @pytest.fixture(scope="module")
 def edge_replay(spark, sf_dir, tmp_path_factory):
@@ -83,18 +85,28 @@ def test_update_merge_upserts_across_batches(spark, edge_replay):
 
 
 def test_running_degrees_stateful(spark, edge_replay):
-    """A1 via explicit keyed state: last emitted degree per vertex ==
-    batch degree."""
+    """A1 via keyed state in the native state-store aggregate: last
+    emitted degree per vertex == batch degree, through both a per-batch
+    callback and the keyed upsert; schema ``id long, degree long``; no
+    per-key pandas state function in the plan."""
+    from gelly_streaming_spark.streaming.runner import run_update_merge
+
     batch, stream = edge_replay
+    running = running_degrees(stream)
+    assert running.schema.simpleString() == "struct<id:bigint,degree:bigint>"
+    plan = running._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
+    assert "FlatMapGroupsInPandasWithState" not in plan
     final: dict = {}
 
     def collect_batch(bdf, bid):
         for row in bdf.collect():
             final[row["id"]] = row["degree"]
 
-    run_foreach_batch(running_degrees(stream), collect_batch)
-    want = {r["id"]: r["degree"] for r in GraphStream(batch).degrees().collect()}
-    assert final == want
+    run_foreach_batch(running, collect_batch)
+    want = GraphStream(batch).degrees()
+    assert final == {r["id"]: r["degree"] for r in want.collect()}
+    merged = run_update_merge(running, ["id"])
+    assert _sorted_rows(merged) == _sorted_rows(want)
 
 
 def test_incremental_cc_matches_batch(spark, tmp_path):
