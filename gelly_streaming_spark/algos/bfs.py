@@ -16,54 +16,30 @@ the cross-engine hash, unlike the cosine/PageRank families.
 100 TB shape: each round joins the edge table against ONLY the current
 frontier (the rows discovered last round — frontier-bounded work,
 never |V| per round), anti-joins out already-settled vertices, and
-appends to the checkpointed distance table; the loop exits early the
-round the frontier empties, detected as a side observation of the
-checkpoint job that runs anyway (the CC convergence trick — no extra
-count job). The frontier reads off a localCheckpoint, so AQE sees its
+appends to the checkpointed distance table; the loop (a
+``loop.supersteps`` loop) exits early the round the frontier empties,
+detected as a side observation of the checkpoint job that runs
+anyway. The frontier reads off a localCheckpoint, so AQE sees its
 EXACT materialized size and picks broadcast-hash when it fits (no
 static hint: a blanket ``F.broadcast(frontier)`` would pin a
-billion-row mid-expansion frontier onto every executor at scale —
-ADVICE r12 asked the claim and the plan to agree, and the plan's
-adaptive choice is the right one)."""
+billion-row mid-expansion frontier onto every executor at scale)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.algos.loop import supersteps, try_driver
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
 
 
-def _try_small_bfs(
-    eu: DataFrame, sources: DataFrame, max_hops: int, small_input_rows: int
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC _try_small_union_find
-    doctrine): one bounded Arrow collect of the directed adjacency plus
-    one bounded collect of the source ids, then a driver-local
-    deque-free BFS — a multi-round distributed frontier loop on a
-    sub-100k-edge snapshot is all job-floor overhead (measured r12:
-    2.0 s distributed vs ~0.3 s driver-local at sf0.1). Spills over the
-    limit -> None, caller runs the distributed loop; tests force it
-    with small_input_rows=0."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu.select("src", "dst"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
-    # the source set rides the same bound: a huge seed set over a tiny
-    # graph must not flood the driver — spill over -> distributed path
-    stbl = bounded_take(
-        sources.select(sources.columns[0]).distinct(),
-        small_input_rows,
-        as_arrow=True,
-    )
-    if stbl.num_rows > small_input_rows:
-        return None
+def _bfs_kernel(max_hops: int, tbl, stbl) -> list[tuple]:
+    """Driver kernel: level-synchronous BFS over the collected adjacency
+    from the collected source ids (both ride the same row bound, so a
+    huge seed set over a tiny graph takes the distributed path)."""
     adj: dict = {}
     for a, b in zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()):
         adj.setdefault(a, []).append(b)
@@ -79,8 +55,7 @@ def _try_small_bfs(
         if not nxt:
             break
         frontier = nxt
-    pdf = pd.DataFrame(sorted(dist.items()), columns=["id", "dist"])
-    return eu.sparkSession.createDataFrame(pdf, "id long, dist int")
+    return sorted(dist.items())
 
 
 def bfs_distances(
@@ -92,7 +67,9 @@ def bfs_distances(
 ) -> DataFrame:
     """Rows (id, dist): minimum hop count from any vertex in ``sources``
     (a 1-column id frame), capped at ``max_hops``. Unreached vertices
-    emit no row."""
+    emit no row. Graphs whose adjacency fits ``small_input_rows`` run
+    the driver-local BFS; ``small_input_rows=0`` forces the distributed
+    frontier loop."""
     if max_hops < 0:
         raise ValueError(f"bfs_distances: max_hops must be >= 0, got {max_hops}")
     if direction not in ("out", "in", "all"):
@@ -106,47 +83,24 @@ def bfs_distances(
         eu = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     else:
         eu = e
-    small = _try_small_bfs(eu, sources, max_hops, small_input_rows)
+    small = try_driver(
+        eu,
+        small_input_rows,
+        partial(_bfs_kernel, max_hops),
+        "id {id}, dist int not null",
+        sources.select(sources.columns[0]).distinct(),
+    )
     if small is not None:
         return small
 
-    from pyspark.sql import Observation
-
-    # Edge-count observation rides the eu checkpoint job (no extra
-    # count job — the loop-floor doctrine below).
+    # The edge and source counts ride their checkpoint jobs. The loop is
+    # job-floor-bound: one eager checkpoint per hop, each hop's frontier
+    # depending on the last. Measured and rejected: AQE off at tiny
+    # widths (the frontier join wants AQE's empty/broadcast shortcuts)
+    # and fusing two hops per checkpoint (the deeper plan and extra
+    # exchanges ate the barrier savings).
     obs_e = Observation()
     eu = eu.observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint()
-
-    # Floor decomposition (VERDICT r12 item 3, measured r13 at sf0.1 on
-    # the q57 fixture (1032 distinct edges, 1214 vertices), small_input_rows=0, hash green vs the
-    # q57 oracle on every variant): the 2.0-2.1 s steady state is
-    # JOB-FLOOR-bound — ~1 eager localCheckpoint job per hop (which the
-    # emptiness observation and next round's frontier read ride) plus 2
-    # standalone count jobs. Measured levers, kept and rejected:
-    # - shuffle-width right-sizing (the pagerank/CC doctrine): ~neutral
-    #   here (the jobs are floor-bound, not task-bound) — kept anyway,
-    #   it can only help and matches the sibling loops;
-    # - folding the eu/initial-dist counts into checkpoint observations
-    #   (two fewer jobs): kept;
-    # - disabling AQE at tiny widths (the pagerank lever): measured
-    #   SLOWER here (1.9-2.1 s vs 1.7-1.9 s AQE-on A-B — the frontier
-    #   join wants AQE's empty/broadcast shortcuts) — REJECTED;
-    # - hop fusion (2 BFS levels per materialization round, next
-    #   frontier = the deepest level set): halves the checkpoint
-    #   barriers but measured NEUTRAL-to-worse (2.0-2.7 s vs 1.7-2.1 —
-    #   the fused round's deeper plan and extra distinct/anti exchanges
-    #   eat the barrier savings at this scale) — REJECTED; the simpler
-    #   per-hop loop also exits earlier on shallow graphs.
-    # Remaining steady state ~1.7-2.4 s across windows = max_hops sequential
-    # checkpoint jobs at the local[32] job floor — irreducible while
-    # each round's frontier depends on the last; small graphs where
-    # that floor dominates are exactly what the driver-local fast path
-    # above serves (0.8-0.9 s on the same fixture).
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), int(obs_e.get["n"]) // 500_000 + 1))
-
-    # Initial settled count rides the dist checkpoint the same way.
     obs0 = Observation()
     dist = (
         sources.select(F.col(sources.columns[0]).alias("id"))
@@ -155,40 +109,32 @@ def bfs_distances(
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    if int(obs0.get["n"]) == 0:
+    n0 = int(obs0.get["n"])
+    if n0 == 0:
         free_checkpoint(eu)
         return dist.select("id", "dist")
-    frontier = dist
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for h in range(max_hops):
-            msgs = (
-                eu.join(frontier, eu["src"] == frontier["id"])
-                .select(F.col("dst").alias("id"))
-                .distinct()
-            )
-            new = msgs.join(dist, "id", "left_anti").withColumn(
-                "dist", F.lit(h + 1)
-            )
-            obs = Observation()
-            nxt = (
-                dist.unionByName(new)
-                .observe(
-                    obs,
-                    F.count_if(F.col("dist") == h + 1).alias("added"),
-                )
-                .localCheckpoint()
-            )
-            added = int(obs.get["added"])
-            free_checkpoint(dist)
-            dist = nxt
-            if added == 0:
-                break
-            # next round's frontier = exactly the rows discovered this
-            # round; reading them off the fresh checkpoint costs no
-            # recompute
-            frontier = dist.where(F.col("dist") == h + 1)
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        free_checkpoint(eu)
+
+    def step(dist: DataFrame, h: int) -> DataFrame:
+        # the frontier is exactly the rows discovered last hop, read off
+        # the fresh checkpoint
+        frontier = dist.where(F.col("dist") == h)
+        msgs = (
+            eu.join(frontier, eu["src"] == frontier["id"])
+            .select(F.col("dst").alias("id"))
+            .distinct()
+        )
+        new = msgs.join(dist, "id", "left_anti").withColumn("dist", F.lit(h + 1))
+        return dist.unionByName(new)
+
+    # the distance table only grows: an unchanged row count means the
+    # frontier emptied
+    dist = supersteps(
+        dist,
+        step,
+        max_hops,
+        signal=F.count(F.lit(1)),
+        start=n0,
+        width=(eu.sparkSession, int(obs_e.get["n"])),
+        held=[eu],
+    )
     return dist.select("id", "dist")

@@ -17,15 +17,18 @@ Spark-native formulations:
 - ``bipartiteness_check`` — the scalable path: components via min-label
   propagation with parity carried along; a component is non-bipartite iff
   some edge closes equal parities. O(diameter) joins, state O(V).
+
+Both distributed loops run on ``loop.supersteps``; the driver fast path
+is ``loop.try_driver``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.algos.loop import supersteps, try_driver
 from gelly_streaming_spark.operators.graphstream import GraphStream
-from gelly_streaming_spark.plans.memory import free_checkpoint
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -35,15 +38,14 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-def _odd_vertex_reach_local(spark: SparkSession, rows) -> DataFrame:
-    """Driver-local 2-coloring over collected (graph, src, dst) rows —
+def _odd_vertices(tbl) -> list[tuple]:
+    """Driver kernel: 2-coloring over collected (graph, src, dst) rows —
     symmetrization and dedup happen as dict inserts, then one BFS per
     component: odd vertex ⇔ lies in a non-bipartite component."""
     import collections as _c
 
     adj: dict = _c.defaultdict(lambda: _c.defaultdict(set))
-    for g, a, b in rows:
-        a, b = int(a), int(b)
+    for g, a, b in zip(*(tbl.column(c).to_pylist() for c in ("graph", "src", "dst"))):
         adj[g][a].add(b)
         adj[g][b].add(a)
     out = []
@@ -69,9 +71,7 @@ def _odd_vertex_reach_local(spark: SparkSession, rows) -> DataFrame:
             if not ok:
                 odd_vertices += len(comp)
         out.append((g, odd_vertices == 0, odd_vertices))
-    return spark.createDataFrame(
-        out, "graph string, is_bipartite boolean, odd_vertices long"
-    )
+    return out
 
 
 def odd_vertex_reach(
@@ -81,66 +81,54 @@ def odd_vertex_reach(
     (graph, is_bipartite, odd_vertices).
 
     Adaptive: under ``small_input_rows`` raw edges the parity closure
-    runs driver-local (per-graph BFS parity sets) instead of the
-    distributed pair fixpoint, whose O(n²) pair state is pure job
-    overhead at fixture sizes; ``small_input_rows=0`` forces the
-    distributed path. The probe is ONE bounded ``limit(N+1).collect()``
-    job on the raw input (the same fused move as connected_components'
-    fast path): symmetrization and dedup are O(E) dict inserts on the
-    driver, so spending cluster jobs on them (the old checkpoint →
-    count → toPandas chain, 3 jobs) bought nothing."""
-    if small_input_rows > 0:
-        from gelly_streaming_spark.plans.probe import bounded_take
-
-        rows = bounded_take(
-            tagged_edges.select("graph", "src", "dst"), small_input_rows
-        )
-        if len(rows) <= small_input_rows:
-            return _odd_vertex_reach_local(tagged_edges.sparkSession, rows)
+    runs driver-local (per-graph BFS 2-coloring, ``loop.try_driver``)
+    instead of the distributed pair fixpoint, whose O(n²) pair state is
+    pure job overhead at fixture sizes; ``small_input_rows=0`` forces
+    the distributed path. The probe collects the raw input: symmetrization
+    and dedup are O(E) dict inserts on the driver."""
+    g = tagged_edges.schema["graph"]
+    small = try_driver(
+        tagged_edges.select("graph", "src", "dst"),
+        small_input_rows,
+        _odd_vertices,
+        f"graph {g.dataType.simpleString()}{'' if g.nullable else ' not null'}, "
+        "is_bipartite boolean not null, odd_vertices bigint not null",
+    )
+    if small is not None:
+        return small
     eu = _symmetrize(tagged_edges).localCheckpoint()
+    obs0 = Observation()
     walk = (
         eu.select("graph", F.col("src").alias("root"))
         .distinct()
         .select("graph", "root", F.col("root").alias("id"), F.lit(0).alias("parity"))
+        .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    prev = walk.count()
-    ckpt = walk  # the live checkpoint backing `walk`
-    converged = False
-    for _ in range(max_iter):
-        # two expansion steps per convergence check (each check is a
-        # driver action; batching halves loop latency)
-        for _ in range(2):
-            nxt = (
-                walk.join(eu, (walk.graph == eu.graph) & (walk.id == eu.src))
-                .select(
-                    walk.graph, "root", F.col("dst").alias("id"),
-                    (F.lit(1) - F.col("parity")).alias("parity"),
-                )
-            )
-            walk = walk.unionByName(nxt).distinct()
-        walk = walk.localCheckpoint()
-        # free the superseded checkpoint (leaked blocks = storage-memory
-        # pressure on every later query; an OOM at 100 TB)
-        free_checkpoint(ckpt)
-        ckpt = walk
-        cur = walk.count()
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
+
+    def step(walk: DataFrame, _i: int) -> DataFrame:
+        nxt = walk.join(eu, (walk.graph == eu.graph) & (walk.id == eu.src)).select(
+            walk.graph, "root", F.col("dst").alias("id"),
+            (F.lit(1) - F.col("parity")).alias("parity"),
+        )
+        return walk.unionByName(nxt).distinct()
+
+    # two expansion steps per convergence check; the closure only grows,
+    # so an unchanged row count is the fixpoint
+    walk = supersteps(
+        walk,
+        step,
+        2 * max_iter,
+        block=2,
+        signal=F.count(F.lit(1)),
+        start=int(obs0.get["n"]),
         # a truncated parity closure can MISS odd vertices — reporting
         # is_bipartite=true from it would be a silent false negative
-        free_checkpoint(eu)
-        free_checkpoint(walk)
-        raise RuntimeError(
-            f"parity closure still growing after max_iter={max_iter} "
-            "double-steps — raise max_iter or use bipartiteness_check "
-            "(O(V) state) for long-diameter graphs"
-        )
-
-    free_checkpoint(eu)  # the output plan reads only the final walk checkpoint
+        fail=f"parity closure still growing after max_iter={max_iter} "
+        "double-steps — raise max_iter or use bipartiteness_check "
+        "(O(V) state) for long-diameter graphs",
+        held=[eu],
+    )
     odd = (
         walk.where((F.col("root") == F.col("id")) & (F.col("parity") == 1))
         .select("graph", "root")
@@ -170,7 +158,9 @@ def bipartiteness_check(
     reachable id with the parity of the adopting path. On convergence an
     edge whose endpoints share component and parity certifies an odd
     cycle. Same shuffle profile as connected_components (join + min-agg
-    per round)."""
+    per round), and the same ``loop.supersteps`` convergence test: the
+    count of vertices whose (comp, parity) changed in the round rides
+    the round's checkpoint job."""
     e = (
         stream.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -180,70 +170,36 @@ def bipartiteness_check(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
 
-    # state: (id, comp, parity) — parity of some shortest adoption path.
-    # Convergence via an OBSERVED (count, sum comp, sum parity) signature
-    # fused into each round's checkpoint job — the same move as
-    # connected_components. (comp, parity) is lexicographically monotone
-    # non-increasing per vertex under min(struct): any comp change
-    # strictly decreases sum(comp); a round of parity-only changes keeps
-    # sum(comp) and strictly decreases sum(parity) — so signature
-    # equality ⟺ fixpoint. Replaces the old changed-rows join +
-    # limit(1).count(), which cost one extra driver-synchronized job per
-    # round on top of the checkpoint job that runs anyway.
-    from pyspark.sql import Observation
-
-    def _sig_cols():
-        return (
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("sc"),
-            F.sum(F.col("parity").cast("decimal(38,0)")).alias("sp"),
-        )
-
-    obs0 = Observation()
-    labels = (
-        eu.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("comp"), F.lit(0).alias("parity"))
-        .observe(obs0, *_sig_cols())
-        .localCheckpoint()
-    )
-    m0 = obs0.get
-    prev_sig = (m0["n"], m0["sc"], m0["sp"])
-    converged = False
-    for _ in range(max_iter):
-        msgs = eu.join(labels, eu.src == labels.id).select(
+    def step(lab: DataFrame, _i: int) -> DataFrame:
+        # state: (id, comp, parity) — parity of some shortest adoption
+        # path; `_c0` carries the round's starting label
+        lab = lab.withColumn("_c0", F.struct("comp", "parity"))
+        msgs = eu.join(lab, eu.src == lab.id).select(
             F.col("dst").alias("id"),
             F.col("comp"),
             (F.lit(1) - F.col("parity")).alias("parity"),
         )
-        obs = Observation()
-        new_labels = (
-            labels.unionByName(msgs)
+        return (
+            lab.unionByName(msgs, allowMissingColumns=True)
             .groupBy("id")
-            .agg(
-                F.min(F.struct("comp", "parity")).alias("s")
-            )
-            .select("id", F.col("s.comp").alias("comp"), F.col("s.parity").alias("parity"))
-            .observe(obs, *_sig_cols())
-            .localCheckpoint()
+            .agg(F.min(F.struct("comp", "parity")).alias("s"), F.max("_c0").alias("_c0"))
+            .select("id", F.col("s.comp").alias("comp"), F.col("s.parity").alias("parity"), "_c0")
         )
-        m = obs.get
-        sig = (m["n"], m["sc"], m["sp"])
-        free_checkpoint(labels)
-        labels = new_labels
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
+
+    labels = supersteps(
+        eu.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("comp"), F.lit(0).alias("parity"))
+        .localCheckpoint(),
+        step,
+        max_iter,
+        signal=F.count_if(F.struct("comp", "parity") != F.col("_c0")),
         # truncated propagation = wrong components AND possibly missed
         # odd cycles — never return it silently
-        free_checkpoint(eu)
-        free_checkpoint(labels)
-        raise RuntimeError(
-            f"(comp, parity) propagation did not converge within "
-            f"max_iter={max_iter} rounds (needs O(diameter)) — raise max_iter"
-        )
+        fail=f"(comp, parity) propagation did not converge within "
+        f"max_iter={max_iter} rounds (needs O(diameter)) — raise max_iter",
+        held=[eu],
+    )
 
     lab = labels.select("id", "comp", "parity")
     conflicts = (
@@ -253,7 +209,6 @@ def bipartiteness_check(
         .groupBy(F.col("c1").alias("component"))
         .agg(F.count(F.lit(1)).alias("conflict_edges"))
     )
-    free_checkpoint(eu)  # conflicts/labels read only e and the final checkpoint
     comps = lab.select(F.col("comp").alias("component")).distinct()
     verdict = comps.join(conflicts, "component", "left").select(
         "component",

@@ -14,7 +14,9 @@ Two Spark-native implementations:
    plan doesn't grow with iterations. Converges in O(diameter) rounds —
    the right trade for the short-diameter graphs this engine targets.
    For 100 TB adversarial (long-path) graphs, switch to
-   ``connected_components_alternating`` (O(log n) rounds).
+   ``connected_components_alternating`` (O(log n) rounds). Both share
+   the driver union-find fast path and the shuffle-width policy of
+   ``loop.py``; the min-label loop is a ``loop.supersteps`` loop.
 
 2. ``connected_components_summary`` — the reference's exact
    SummaryAggregation shape: per-bucket union-find folds merged globally
@@ -25,83 +27,58 @@ Two Spark-native implementations:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gelly_streaming_spark.algos.loop import shuffle_width, supersteps, try_driver
 from gelly_streaming_spark.operators.aggregation import SummaryAggregation
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint, track_persist
+from gelly_streaming_spark.plans.probe import _estimated_bytes
 
 # Measured edge count above which the alternating-CC star operations
 # switch to their skew-safe (partial-agg + AQE-splittable join) form.
 _SKEW_SAFE_EDGES = 50_000_000
+_CC_SCHEMA = "id {id}, component {id}"
 
 
-def _try_small_union_find(e: DataFrame, small_input_rows: int) -> DataFrame | None:
-    """Adaptive small-graph fast path, fused to ONE driver action.
-
-    ``limit(N+1).collect()`` replaces the round-2 localCheckpoint → count →
-    toPandas → createDataFrame chain (4 jobs, one materializing the whole
-    symmetrized set) with a single bounded collect: at most N+1 canonical
-    edge rows ever cross to the driver, whatever the input size. If the
-    limit spills over, return None — the caller runs the distributed plan,
-    having wasted a ≤N-row transfer plus the dedup's map side (callers
-    that KNOW the input is huge pass ``small_input_rows=0`` and skip the
-    probe entirely). Union-find needs no symmetrization (union(a,b) is
-    direction-free), so the caller's canonical set is collected as-is.
-
-    Both driver transfers ride Arrow: ``collect()``'s per-Row Py4J
-    boxing measured ~1 s for a 191 k-edge probe where the Arrow batch
-    is tens of ms, and the label table returns through a pandas
-    createDataFrame (one Arrow batch) instead of a list-of-tuples."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(e.select("src", "dst"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
+def _union_find(tbl) -> list[tuple]:
+    """Driver kernel: union-find needs no symmetrization (union(a, b) is
+    direction-free), so the canonical edge set is folded as collected."""
     ds = DisjointSet()
     for a, b in zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()):
         ds.union(a, b)
-    out = sorted((x, ds.find(x)) for x in ds.parent)
-    pdf = pd.DataFrame(out, columns=["id", "component"], dtype="int64")
-    return e.sparkSession.createDataFrame(pdf, "id long, component long")
+    return sorted((x, ds.find(x)) for x in ds.parent)
 
 
 def connected_components(
     stream: GraphStream,
     max_iter: int = 100,
-    check_every: int = 2,
     small_input_rows: int = 100_000,
 ) -> DataFrame:
     """Per-vertex minimum-reachable-id labels: rows (id, component).
 
     Adaptive execution (the same move as broadcast-join selection): a
-    graph whose symmetrized edge list is under ``small_input_rows`` is
+    graph whose canonical edge list is under ``small_input_rows`` is
     solved with a driver-local union-find — O(E α(E)) in one task beats a
     multi-round distributed fixpoint whose per-round cost is all job
     overhead at that size. Larger inputs run the distributed min-label
     propagation; ``small_input_rows=0`` forces it (tests do).
 
-    ``check_every`` label-propagation rounds run between convergence
-    checks — each check is a driver action, so batching rounds roughly
-    halves wall-clock on short-diameter graphs at the cost of ≤1 wasted
-    round after the fixpoint. Raises if ``max_iter`` rounds pass without
-    the fixpoint (a partially-propagated labeling is WRONG components,
+    Two label-propagation rounds run between convergence checks — each
+    check is a driver action, so batching rounds roughly halves
+    wall-clock on short-diameter graphs at the cost of ≤1 wasted round
+    after the fixpoint. Raises if ``max_iter`` rounds pass without the
+    fixpoint (a partially-propagated labeling is WRONG components,
     never returned silently — min-label needs O(diameter) rounds, so a
     long-path graph should use ``connected_components_alternating``)."""
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
     e = (
         stream.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    small = _try_small_union_find(e, small_input_rows)
+    small = try_driver(e, small_input_rows, _union_find, _CC_SCHEMA)
     if small is not None:
         return small
     # Symmetrize once; reuse across every iteration.
@@ -109,82 +86,36 @@ def connected_components(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
 
-    # Right-size the iteration's shuffle width to the measured edge count
-    # (count over the just-materialized checkpoint is a cache read — see
-    # the alternating variant for the rationale). Restored in `finally`.
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    old_aqe = sess_conf.get("spark.sql.adaptive.enabled")
-    loop_parts = max(1, min(int(old_parts), eu.count() // 500_000 + 1))
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        if loop_parts <= 4:
-            sess_conf.set("spark.sql.adaptive.enabled", "false")
-
-        # Convergence via an OBSERVED (count, exact label sum) signature
-        # on each block's checkpoint job: per-vertex labels are
-        # monotonically non-increasing under min-label steps, so the sum
-        # is unchanged across a block iff NO label changed — the same
-        # fixpoint test as the old changed-rows join, but as a side
-        # aggregation of the job that runs anyway instead of a separate
-        # join + count job per block. decimal(38,0) keeps the sum exact
-        # at any vertex count (a double would risk false convergence).
-        from pyspark.sql import Observation
-
-        _SIG = lambda: (  # noqa: E731
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"),
+    def step(lab: DataFrame, _i: int) -> DataFrame:
+        if "_c0" not in lab.columns:
+            # a block's first round carries the label it started from, so
+            # the block's checkpoint job can count the labels it changed
+            lab = lab.withColumn("_c0", F.col("comp"))
+        msgs = eu.join(lab, eu.src == lab.id).select(
+            F.col("dst").alias("id"), F.col("comp")
         )
-        obs0 = Observation()
-        labels = (
-            eu.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("comp", F.col("id"))
-            .observe(obs0, *_SIG())
-            .localCheckpoint()
+        return (
+            lab.unionByName(msgs, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(F.min("comp").alias("comp"), F.max("_c0").alias("_c0"))
         )
-        m0 = obs0.get
-        prev_sig = (m0["n"], m0["s"])
 
-        def step(lab: DataFrame) -> DataFrame:
-            msgs = eu.join(lab, eu.src == lab.id).select(
-                F.col("dst").alias("id"), F.col("comp")
-            )
-            return (
-                lab.unionByName(msgs).groupBy("id").agg(F.min("comp").alias("comp"))
-            )
-
-        rounds = 0
-        converged = False
-        while rounds < max_iter:
-            new_labels = labels
-            for _ in range(min(check_every, max_iter - rounds)):
-                new_labels = step(new_labels)
-                rounds += 1
-            obs = Observation()
-            new_labels = new_labels.observe(obs, *_SIG()).localCheckpoint()
-            m = obs.get
-            sig = (m["n"], m["s"])
-            # free the superseded checkpoint — a leaked block per round is
-            # storage-memory pressure now and an OOM at 100 TB
-            free_checkpoint(labels)
-            labels = new_labels
-            if sig == prev_sig:
-                converged = True
-                break
-            prev_sig = sig
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
-    if not converged:
-        free_checkpoint(eu)
-        free_checkpoint(labels)
-        raise RuntimeError(
-            f"min-label CC did not converge within max_iter={max_iter} rounds "
-            "(needs O(diameter)) — raise max_iter or use "
-            "connected_components_alternating (O(log n) rounds)"
-        )
-    free_checkpoint(eu)  # returned plan reads only the final labels checkpoint
+    labels = supersteps(
+        lambda: eu.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("comp", F.col("id"))
+        .localCheckpoint(),
+        step,
+        max_iter,
+        block=2,
+        signal=F.count_if(F.col("comp") != F.col("_c0")),
+        fail=f"min-label CC did not converge within max_iter={max_iter} rounds "
+        "(needs O(diameter)) — raise max_iter or use "
+        "connected_components_alternating (O(log n) rounds)",
+        width=(eu.sparkSession, eu.count()),
+        aqe_off=True,
+        held=[eu],
+    )
     return labels.select("id", F.col("comp").alias("component"))
 
 
@@ -245,7 +176,7 @@ def connected_components_alternating(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    small = _try_small_union_find(e, small_input_rows)
+    small = try_driver(e, small_input_rows, _union_find, _CC_SCHEMA)
     if small is not None:
         if stats is not None:
             stats["rounds"] = 0
@@ -255,8 +186,6 @@ def connected_components_alternating(
     # release_persisted for the rest of the session.
     e = track_persist(e)
     e0 = e  # the persisted base edge set (read again by the final verts)
-
-    from pyspark.sql import Window
 
     # Every helper references its CHECKPOINTED input exactly once on the
     # window path: symmetrization is an explode (not a union of two
@@ -320,33 +249,20 @@ def connected_components_alternating(
     # MEASURED contracted edge count, the loop re-sizes from that. On a
     # contracted/small graph each job at the session's full shuffle
     # width is pure task-launch + AQE-replan overhead (measured ~25% of
-    # q15d wall-clock). Static right-sizing up front beats AQE
-    # discovering the same coalesce per stage, per job — and never
-    # widens past the session default, so a 100 TB run keeps its
-    # configured width. Conf is restored in `finally` (runtime conf,
-    # driver-sequential loop — no concurrent-query interference).
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    old_aqe = sess_conf.get("spark.sql.adaptive.enabled")
-    from gelly_streaming_spark.plans.probe import _estimated_bytes
-
-    est_bytes = _estimated_bytes(e)  # shared helper (unknown → huge)
-    width0 = max(1, min(int(old_parts), est_bytes // (64 << 20) + 1))
+    # q15d wall-clock), and the width never exceeds the session's.
+    est_bytes = _estimated_bytes(e)  # unknown → huge
     if skew_safe is None:
         # auto: ~16 bytes/canonical edge — flip to the skew-safe star
         # ops when the estimate clears the threshold; re-decided per
         # round below once measured counts exist
         skew["safe"] = est_bytes > _SKEW_SAFE_EDGES * 16
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(width0))
-        if width0 <= 4:
-            sess_conf.set("spark.sql.adaptive.enabled", "false")
+    with shuffle_width(stream.edges.sparkSession, aqe_off=True) as resize:
+        resize(est_bytes // (64 << 20) + 1)
         # No up-front checksum job: round 1 both materializes the
         # persist and records the first (count, set-hash) signature via
         # its observe(), so convergence tracking starts one round in.
         # The only input that loses a round to this is one that is
-        # ALREADY a star forest (detected after 2 rounds instead of 1);
-        # every other input saves a whole driver-synchronized job.
+        # ALREADY a star forest (detected after 2 rounds instead of 1).
         prev_sum = None
         # ONE job per contraction round: the round's eager
         # localCheckpoint both cuts lineage (mandatory — each star
@@ -354,13 +270,8 @@ def connected_components_alternating(
         # compile to hundreds of duplicated subtrees; measured 36 s vs
         # 7 s on the q15d graph) and, via observe(), computes the
         # convergence checksum as a side aggregation of the same
-        # materialization — no separate checksum job, and convergence
-        # is now detected every round instead of every other. The
-        # per-round test (set unchanged by large∘small) is exactly the
-        # round-function fixpoint the block-wise comparison tested, and
-        # a fixpoint of the round function is a star forest.
-        from pyspark.sql import Observation
-
+        # materialization. A set unchanged by large∘small is a fixpoint
+        # of the round function, and that fixpoint is a star forest.
         while rounds < max_iter:
             obs = Observation()
             new_e = (
@@ -389,19 +300,8 @@ def connected_components_alternating(
                 converged = True
                 break
             if prev_sum is None:
-                # first measured edge count — re-size the loop's shuffle
-                # width to the data (same policy the old up-front
-                # checksum applied, now from a free side-observation)
-                loop_parts = max(
-                    1, min(int(old_parts), cur_sum[0] // 250_000 + 1)
-                )
-                sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-                if loop_parts <= 4:
-                    # tiny regime: AQE replan latency outweighs anything
-                    # it could re-decide over ≤4 right-sized partitions
-                    sess_conf.set("spark.sql.adaptive.enabled", "false")
-                else:
-                    sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
+                # first measured edge count — re-size to the data
+                resize(cur_sum[0] // 250_000 + 1)
             if skew_safe is None:
                 # a contracting graph legitimately shrinks back under the
                 # threshold — fall back to the cheaper window form then
@@ -429,19 +329,14 @@ def connected_components_alternating(
         # window emits one (src, mn) row per group and a src with two
         # distinct parents could not be a round-function fixpoint (the
         # next min-window would rewrite it) — and every root appears
-        # only as a dst. So children rows ARE label rows as-is (no
-        # groupBy — the min-agg it replaced was the star-forest
-        # identity, one whole shuffle spent re-deriving a property the
-        # checksum fixpoint already guarantees; the oracle hash-parity
-        # and the min-label cross-check property test would both catch
-        # a duplicate-src violation); roots self-label via one distinct.
+        # only as a dst. So children rows ARE label rows as-is, with no
+        # groupBy (the oracle hash-parity and the min-label cross-check
+        # property test would both catch a duplicate-src violation);
+        # roots self-label via one distinct.
         labels = e.select(F.col("src").alias("id"), F.col("dst").alias("component")).unionByName(
             e.select(F.col("dst").alias("id"), F.col("dst").alias("component")).distinct()
         )
         out = labels.localCheckpoint()
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
     e0.unpersist()
     free_checkpoint(e)
     return out

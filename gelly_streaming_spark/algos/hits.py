@@ -26,40 +26,26 @@ certified contract is 2.
 100 TB shape: per round two keyed shuffles (a src-keyed join of edges
 against the |V|-row hub table + dst-keyed partial-agg sum; then the
 mirror for hubs) over |V|/|E|-bounded data — the q56 loop shape without
-the teleport column; the final frame is checkpointed so the returned
-plan is self-contained (2 rounds stay shallow, so no mid-loop cuts).
+the teleport column, run by ``loop.supersteps``; the final frame is
+checkpointed so the returned plan is self-contained (2 rounds stay
+shallow, so no mid-loop cuts).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.algos.loop import supersteps, try_driver
 from gelly_streaming_spark.operators.graphstream import GraphStream
-from gelly_streaming_spark.plans.memory import free_checkpoint
 
 
-def _try_small_hits(
-    e_plan: DataFrame, iters: int, small_input_rows: int
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC/BFS/LPA/k-core doctrine):
-    one bounded Arrow collect of the distinct directed edges, then the
-    driver-local mutual-reinforcement rounds — all arithmetic is exact
-    integer (Python ints cannot overflow, matching the bounded-iters
-    64-bit contract on the JVM side), so the fast path is bit-safe by
-    construction. Measured r15 at sf0.1: 2.9 s distributed (2 rounds of
-    double join+agg+|V|-row left joins — fixed job floors dominate the
-    1.2k-vertex fixture) -> ~0.45 s. Spills over the limit -> None;
-    tests force the distributed loop with small_input_rows=0."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(e_plan, small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
+def _hits_kernel(iters: int, tbl) -> list[tuple]:
+    """Driver kernel: the mutual-reinforcement rounds in exact Python
+    integers (no overflow, matching the bounded-iters 64-bit contract on
+    the JVM side), so the fast path is bit-safe by construction."""
     edges = list(
         zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist())
     )
@@ -73,13 +59,7 @@ def _try_small_hits(
         hub = {v: 0 for v in verts}
         for u, v in edges:
             hub[u] += auth[v]
-    pdf = pd.DataFrame(
-        sorted((v, hub[v], auth[v]) for v in verts),
-        columns=["id", "hub", "auth"],
-    )
-    return e_plan.sparkSession.createDataFrame(
-        pdf, "id long, hub long, auth long"
-    )
+    return sorted((v, hub[v], auth[v]) for v in verts)
 
 
 def hits(
@@ -88,68 +68,58 @@ def hits(
     """Rows (id, hub, auth): unnormalized HITS scores after ``iters``
     synchronous rounds (exact integers — see module docstring). Inputs
     whose distinct edge list fits ``small_input_rows`` run the
-    driver-local fast path (bounded-collect doctrine); the distributed
-    loop below is the scale path, forced in tests with
-    ``small_input_rows=0``."""
+    driver-local fast path; the distributed loop below is the scale
+    path, forced in tests with ``small_input_rows=0``."""
     if iters < 1:
         raise ValueError(f"hits: iters must be >= 1, got {iters}")
-    from pyspark.sql import Observation
-
     e_plan = (
         stream.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    small = _try_small_hits(e_plan, iters, small_input_rows)
+    small = try_driver(
+        e_plan, small_input_rows, partial(_hits_kernel, iters),
+        "id {id}, hub bigint not null, auth bigint not null",
+    )
     if small is not None:
         return small
     obs_e = Observation()
-    e = (
-        e_plan
-        .observe(obs_e, F.count(F.lit(1)).alias("m"))
-        .localCheckpoint()
-    )
+    e = e_plan.observe(obs_e, F.count(F.lit(1)).alias("m")).localCheckpoint()
     verts = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
         .localCheckpoint()
     )
-    # loop shuffle width right-sized to the measured edge count (the
-    # sibling-loop convention); conf restored in finally
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), int(obs_e.get["m"]) // 500_000 + 1))
-    hub = verts.withColumn("h", F.lit(1).cast("long"))
-    auth = None
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for _ in range(iters):
-            a_sums = (
-                e.join(hub, e["src"] == hub["id"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("h").alias("a"))
-            )
-            auth = verts.join(a_sums, "id", "left").select(
-                "id", F.coalesce("a", F.lit(0).cast("long")).alias("a")
-            )
-            h_sums = (
-                e.join(auth, e["dst"] == auth["id"])
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("a").alias("h"))
-            )
-            hub = verts.join(h_sums, "id", "left").select(
-                "id", F.coalesce("h", F.lit(0).cast("long")).alias("h")
-            )
-        out = (
-            hub.join(auth, "id")
-            .select("id", F.col("h").alias("hub"), F.col("a").alias("auth"))
-            .localCheckpoint()
+    zero = F.lit(0).cast("long")
+
+    def step(hub: DataFrame, _i: int) -> DataFrame:
+        a_sums = (
+            e.join(hub, e["src"] == hub["id"])
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("h").alias("a"))
         )
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        free_checkpoint(e)
-        # inside finally (ADVICE r14): an exception mid-loop otherwise
-        # leaks the |V|-row verts checkpoint until GC
-        free_checkpoint(verts)
-    return out
+        auth = verts.join(a_sums, "id", "left").select(
+            "id", F.coalesce("a", zero).alias("a")
+        )
+        h_sums = (
+            e.join(auth, e["dst"] == auth["id"])
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum("a").alias("h"))
+        )
+        # the |V|-row auth table carries the round's auth scores along
+        return auth.join(h_sums, "id", "left").select(
+            "id", F.coalesce("h", zero).alias("h"), "a"
+        )
+
+    # few rounds stay shallow: the only checkpoint is the final one
+    out = supersteps(
+        verts.withColumn("h", F.lit(1).cast("long")),
+        step,
+        iters,
+        block=iters,
+        width=(e.sparkSession, int(obs_e.get["m"])),
+        held=[e, verts],
+        free_init=False,
+    )
+    return out.select("id", F.col("h").alias("hub"), F.col("a").alias("auth"))

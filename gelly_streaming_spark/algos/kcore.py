@@ -21,54 +21,32 @@ practice).
 
 100 TB shape: per step, ONE (vertex)-keyed partial-agg degree count
 (map-side combine), then two semi-joins restricting the edge list to
-surviving endpoints — sort-merge joins AQE can split on skew; the edge
-list checkpoints per step (plan depth O(1), superseded blocks freed),
-and the step's surviving-edge count rides the checkpoint job's
-Observation so the early exit costs zero extra jobs. All arithmetic is
-integer — no float margins exist for the cross-engine hash. Snapshots
-whose symmetrized edge list fits ``small_input_rows`` peel
-driver-locally instead (the CC/BFS/LPA bounded-collect doctrine —
-measured r15: the distributed loop's per-round floor is ~0.1 s job
-submit + ~0.2 s compute+checkpoint at loop_parts=1, so 3 rounds on a
-20k-edge snapshot pay ~1.6 s of fixed floors the driver peel avoids).
+surviving endpoints — sort-merge joins AQE can split on skew. The loop
+is a ``loop.supersteps`` loop: the edge list checkpoints per step (plan
+depth O(1), superseded blocks freed), and the step's surviving-edge
+count rides the checkpoint job's Observation, so the early exit costs
+no extra job. All arithmetic is integer — no float margins exist for
+the cross-engine hash. Snapshots whose symmetrized edge list fits
+``small_input_rows`` peel driver-locally instead (``loop.try_driver``):
+the distributed loop's per-round floor is ~0.1 s job submit + ~0.2 s
+compute and checkpoint at one partition, which the driver peel avoids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import collections
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.algos.loop import supersteps, try_driver
 from gelly_streaming_spark.operators.graphstream import GraphStream
-from gelly_streaming_spark.plans.memory import free_checkpoint
 
 
-def _try_small_kcore(
-    eu_plan: DataFrame,
-    k: int,
-    rounds: int,
-    converged: bool,
-    small_input_rows: int,
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC/BFS/LPA doctrine): one
-    bounded Arrow collect of the symmetrized distinct adjacency, then a
-    driver-local synchronous peel — a multi-round distributed loop on a
-    sub-100k-edge snapshot is all job-floor overhead (measured r15 at
-    sf0.1: 3 distributed peel rounds cost 1.6-1.9 s of which ~0.3 s is
-    real per-round compute and the rest is fixed job/checkpoint floors;
-    the driver peel returns the same rows in ~0.4 s). Spills over the
-    limit -> None, caller runs the distributed loop; tests force it
-    with small_input_rows=0."""
-    if small_input_rows <= 0:
-        return None
-    import collections
-
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu_plan, small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
+def _peel_kernel(k: int, rounds: int, converged: bool, tbl) -> list[tuple]:
+    """Driver kernel: synchronous peel of the collected symmetrized
+    distinct adjacency."""
     pairs = list(
         zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist())
     )
@@ -83,9 +61,7 @@ def _try_small_kcore(
         pairs = nxt
         if not converged and step >= rounds:
             break
-    deg = collections.Counter(u for u, _v in pairs)
-    pdf = pd.DataFrame(sorted(deg.items()), columns=["id", "degree"])
-    return eu_plan.sparkSession.createDataFrame(pdf, "id long, degree long")
+    return sorted(collections.Counter(u for u, _v in pairs).items())
 
 
 def k_core(
@@ -98,66 +74,50 @@ def k_core(
     """Rows (id, degree): surviving vertices and their degrees after
     ``rounds`` synchronous k-core peel steps (``converged=True`` peels
     to the true k-core fixpoint instead). Inputs whose symmetrized
-    distinct edge list fits ``small_input_rows`` peel driver-locally
-    (bounded-collect doctrine); the distributed loop below is the scale
-    path, forced in tests with ``small_input_rows=0``."""
+    distinct edge list fits ``small_input_rows`` peel driver-locally;
+    the distributed loop below is the scale path, forced in tests with
+    ``small_input_rows=0``."""
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"k_core: rounds must be >= 1, got {rounds}")
-    from pyspark.sql import Observation
-
     e = (
         stream.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    eu_plan = e.unionByName(
+    # symmetrize THEN distinct: an input holding both (a,b) and (b,a) is
+    # one undirected edge, not two per direction
+    eu = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    small = _try_small_kcore(eu_plan, k, rounds, converged, small_input_rows)
+    small = try_driver(
+        eu, small_input_rows, partial(_peel_kernel, k, rounds, converged),
+        "id {id}, degree bigint not null",
+    )
     if small is not None:
         return small
     obs0 = Observation()
-    # eu_plan symmetrizes THEN distincts (the label_propagation
-    # convention): an input holding both (a,b) and (b,a) otherwise
-    # contributes the pair twice in each direction and double-counts
-    # both endpoints' degrees against the documented undirected-DISTINCT
-    # contract
-    eu = eu_plan.observe(obs0, F.count(F.lit(1)).alias("m")).localCheckpoint()
-    m_prev = int(obs0.get["m"])
-    prev_ckpt = eu
-    # loop shuffle width right-sized to the measured edge count (the
-    # LPA/PageRank convention — 32-way exchanges on a 10k-edge snapshot
-    # are pure task overhead); conf restored in finally
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), m_prev // 500_000 + 1))
-    step = 0
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        while m_prev > 0:
-            step += 1
-            deg = eu.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-            keep = deg.where(F.col("degree") >= k).select("src")
-            obs = Observation()
-            nxt = (
-                eu.join(keep, "src", "left_semi")
-                .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("m"))
-                .localCheckpoint()
-            )
-            m = int(obs.get["m"])
-            free_checkpoint(prev_ckpt)
-            prev_ckpt = nxt
-            eu = nxt
-            if m == m_prev or m == 0:
-                break  # fixpoint (or empty) — remaining steps are no-ops
-            m_prev = m
-            if not converged and step >= rounds:
-                break
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
+    eu = eu.observe(obs0, F.count(F.lit(1)).alias("m")).localCheckpoint()
+    m0 = int(obs0.get["m"])
+
+    def step(eu: DataFrame, _i: int) -> DataFrame:
+        deg = eu.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+        keep = deg.where(F.col("degree") >= k).select("src")
+        return eu.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
+        )
+
+    if m0 > 0:
+        # the edge list only shrinks: an unchanged count is the fixpoint
+        eu = supersteps(
+            eu,
+            step,
+            None if converged else rounds,
+            signal=F.count(F.lit(1)),
+            start=m0,
+            width=(eu.sparkSession, m0),
+        )
     return eu.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )

@@ -23,90 +23,38 @@ reproducibility variant.
 100 TB shape: per round, ONE (dst, lbl)-keyed partial-agg count shuffle
 over the neighbor-label stream (map-side combine compresses repeated
 labels before the exchange) and one dst-keyed argmax fold —
-``max(struct(cnt, -lbl))`` picks most-frequent-then-smallest WITHOUT a
-window sort — then one left join back to the |V|-row label table;
-every per-round frame is |V|- or |E|-bounded, the label table
-checkpoints per round (plan depth O(1); the changed-label observation
-rides that job, so the early exit is free), and the loop's
-shuffle width is right-sized to the measured edge count exactly as the
-sibling loops do (conf restored in ``finally``). The changed-label
-count rides the checkpoint job's Observation — early exit costs zero
-extra jobs (the CC convergence trick).
+``min(struct(-cnt, lbl))`` picks most-frequent-then-smallest WITHOUT a
+window sort, for any orderable id type — then one left join back to the
+|V|-row label table. Every per-round frame is |V|- or |E|-bounded. The
+loop is a ``loop.supersteps`` loop: the label table checkpoints per
+round, the changed-label count rides that job (the early exit costs no
+extra job), and the shuffle width follows the measured edge count.
+Weighted LPA (q69) runs the same loop and fast path with summed edge
+weights as scores.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.algos.loop import supersteps, try_driver
 from gelly_streaming_spark.operators.graphstream import GraphStream
-from gelly_streaming_spark.plans.memory import free_checkpoint
 
 
-def _try_small_lpa(
-    eu: DataFrame, iters: int, small_input_rows: int
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC/BFS doctrine): one bounded
-    Arrow collect of the symmetrized adjacency, then a driver-local
-    synchronous LPA — a multi-round distributed loop on a sub-100k-edge
-    snapshot is all job-floor overhead. Spills over the limit -> None,
-    caller runs the distributed loop; tests force it with
-    small_input_rows=0."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu.select("src", "dst"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
-    # eu is symmetrized by the caller, so every vertex appears as a
+def _lpa_kernel(iters: int, tbl) -> list[tuple]:
+    """Driver kernel: synchronous LPA over the collected symmetrized
+    adjacency. Weights, when collected, are exact decimals (Python
+    Decimal), so score sums and comparisons match the distributed
+    decimal path and the oracle's DECIMAL arithmetic."""
+    src, dst = tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()
+    ws = tbl.column("w").to_pylist() if "w" in tbl.column_names else [1] * len(src)
+    # the adjacency is symmetrized, so every vertex appears as a
     # source — adjacency keys ARE the vertex set
     adj: dict = {}
-    for a, b in zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()):
-        adj.setdefault(a, []).append(b)
-    lbl = {v: v for v in adj}
-    for _ in range(iters):
-        nxt = {}
-        changed = False
-        for v, neigh in adj.items():
-            counts: dict = {}
-            for u in neigh:
-                counts[lbl[u]] = counts.get(lbl[u], 0) + 1
-            # most frequent, ties -> smallest label
-            best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            nxt[v] = best
-            changed = changed or best != lbl[v]
-        lbl = nxt
-        if not changed:
-            break
-    pdf = pd.DataFrame(sorted(lbl.items()), columns=["id", "lbl"])
-    return eu.sparkSession.createDataFrame(pdf, "id long, lbl long")
-
-
-def _try_small_weighted_lpa(
-    eu: DataFrame, iters: int, small_input_rows: int
-) -> DataFrame | None:
-    """Weighted sibling of _try_small_lpa: the collected weights are
-    exact decimals (python Decimal), so driver-side score sums and
-    comparisons are exact — identical to the distributed decimal path
-    and the oracle's DECIMAL arithmetic."""
-    if small_input_rows <= 0:
-        return None
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(eu.select("src", "dst", "w"), small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
-    adj: dict = {}
-    for a, b, w in zip(
-        tbl.column("src").to_pylist(),
-        tbl.column("dst").to_pylist(),
-        tbl.column("w").to_pylist(),
-    ):
+    for a, b, w in zip(src, dst, ws):
         adj.setdefault(a, []).append((b, w))
     lbl = {v: v for v in adj}
     for _ in range(iters):
@@ -116,14 +64,100 @@ def _try_small_weighted_lpa(
             scores: dict = {}
             for u, w in neigh:
                 scores[lbl[u]] = scores.get(lbl[u], 0) + w
+            # highest score, ties -> smallest label
             best = min(scores.items(), key=lambda kv: (-kv[1], kv[0]))[0]
             nxt[v] = best
             changed = changed or best != lbl[v]
         lbl = nxt
         if not changed:
             break
-    pdf = pd.DataFrame(sorted(lbl.items()), columns=["id", "lbl"])
-    return eu.sparkSession.createDataFrame(pdf, "id long, lbl long")
+    return sorted(lbl.items())
+
+
+def _lpa(
+    stream: GraphStream, iters: int, small_input_rows: int, weight_col: str | None
+) -> DataFrame:
+    """The one LPA loop: neighbor labels scored by count, or by summed
+    edge weight when ``weight_col`` is given."""
+    if weight_col is None:
+        e = (
+            stream.edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .distinct()
+        )
+        eu = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct()
+        score = F.count(F.lit(1))
+    else:
+        w = F.col(weight_col).cast("decimal(18,2)").alias("w")
+        e = stream.edges.select("src", "dst", w).where(F.col("src") != F.col("dst"))
+        eu = (
+            e.unionByName(
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+            )
+            .groupBy("src", "dst")
+            .agg(F.sum("w").alias("w"))
+        )
+        score = F.sum("w")
+    small = try_driver(eu, small_input_rows, partial(_lpa_kernel, iters), "id {id}, lbl {id}")
+    if small is not None:
+        return small
+
+    obs_e = Observation()
+    eu = eu.observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    labels = (
+        eu.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("lbl", F.col("id"))
+        .localCheckpoint()
+    )
+
+    def step(labels: DataFrame, _i: int) -> DataFrame:
+        # neighbor labels arrive at dst; (dst, lbl) partial-agg score,
+        # then the argmax fold: min(struct(-score, lbl)) is
+        # highest-score-then-SMALLEST-label without a window sort, for
+        # any orderable label type
+        cnt = (
+            eu.join(labels, eu["src"] == labels["id"])
+            .select(F.col("dst").alias("vid"), "lbl", *(["w"] if weight_col else []))
+            .groupBy("vid", "lbl")
+            .agg(score.alias("c"))
+        )
+        pick = cnt.groupBy("vid").agg(
+            F.min(F.struct((-F.col("c")).alias("nc"), F.col("lbl")))["lbl"].alias("new_lbl")
+        )
+        new_lbl = F.coalesce(F.col("new_lbl"), F.col("lbl"))
+        return labels.join(pick, labels["id"] == pick["vid"], "left").select(
+            "id", new_lbl.alias("lbl"), (new_lbl != F.col("lbl")).alias("_chg")
+        )
+
+    # synchronous LPA is idempotent once no label changes, so the early
+    # exit cannot diverge from the fixed-round contract
+    return supersteps(
+        labels,
+        step,
+        iters,
+        signal=F.count_if(F.col("_chg")),
+        width=(eu.sparkSession, int(obs_e.get["n"])),
+        held=[eu],
+    )
+
+
+def label_propagation(
+    stream: GraphStream,
+    iters: int = 3,
+    small_input_rows: int = 100_000,
+) -> DataFrame:
+    """Rows (id, lbl): each vertex's community label after ``iters``
+    synchronous label-propagation rounds (min-label tie-break) over the
+    undirected distinct edge set, self-loops dropped. Isolated-by-
+    filtering vertices cannot occur (vertices are derived from the same
+    filtered edge set), but a vertex whose neighbors all carry its own
+    label simply keeps it."""
+    if iters < 1:
+        raise ValueError(f"label_propagation: iters must be >= 1, got {iters}")
+    return _lpa(stream, iters, small_input_rows, None)
 
 
 def weighted_label_propagation(
@@ -142,177 +176,10 @@ def weighted_label_propagation(
     margins (the q60 integer-exactness property, kept under weighting).
     Parallel edges and both directions of an unordered pair SUM into
     one symmetric weight before the loop (one (src, dst) partial-agg
-    shuffle); self-loops are dropped.
-
-    Same 100 TB loop shape as ``label_propagation``: per round ONE
-    (vertex, label)-keyed partial-agg SUM shuffle, the windowless
-    ``max(struct(score, -lbl))`` argmax fold, one left join back to the
-    |V|-row label table, per-round checkpoint carrying the changed-label
-    observation."""
+    shuffle); self-loops are dropped. Otherwise the loop and fast path
+    are ``label_propagation``'s."""
     if iters < 1:
         raise ValueError(
             f"weighted_label_propagation: iters must be >= 1, got {iters}"
         )
-    w = F.col(weight_col).cast("decimal(18,2)").alias("w")
-    e = stream.edges.select("src", "dst", w).where(F.col("src") != F.col("dst"))
-    eu = (
-        e.unionByName(
-            e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-    )
-    small = _try_small_weighted_lpa(eu, iters, small_input_rows)
-    if small is not None:
-        return small
-
-    from pyspark.sql import Observation
-
-    obs_e = Observation()
-    eu = eu.observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint()
-
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), int(obs_e.get["n"]) // 500_000 + 1))
-
-    labels = (
-        eu.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint()
-    )
-    prev_ckpt = labels
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for i in range(iters):
-            cnt = (
-                eu.join(labels, eu["src"] == labels["id"])
-                .select(F.col("dst").alias("vid"), "lbl", "w")
-                .groupBy("vid", "lbl")
-                .agg(F.sum("w").alias("c"))
-            )
-            pick = cnt.groupBy("vid").agg(
-                (-F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl")))["nl"])
-                .alias("new_lbl")
-            )
-            obs = Observation()
-            nxt = (
-                labels.join(pick, labels["id"] == pick["vid"], "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
-                    (
-                        F.coalesce(F.col("new_lbl"), F.col("lbl"))
-                        != F.col("lbl")
-                    ).alias("_chg"),
-                )
-                .observe(obs, F.count_if(F.col("_chg")).alias("chg"))
-                .select("id", "lbl")
-                .localCheckpoint()
-            )
-            changed = int(obs.get["chg"])
-            if prev_ckpt is not None:
-                free_checkpoint(prev_ckpt)
-            prev_ckpt = nxt
-            labels = nxt
-            if changed == 0:
-                break
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        free_checkpoint(eu)
-    return labels.select("id", "lbl")
-
-
-def label_propagation(
-    stream: GraphStream,
-    iters: int = 3,
-    small_input_rows: int = 100_000,
-) -> DataFrame:
-    """Rows (id, lbl): each vertex's community label after ``iters``
-    synchronous label-propagation rounds (min-label tie-break) over the
-    undirected distinct edge set, self-loops dropped. Isolated-by-
-    filtering vertices cannot occur (vertices are derived from the same
-    filtered edge set), but a vertex whose neighbors all carry its own
-    label simply keeps it."""
-    if iters < 1:
-        raise ValueError(f"label_propagation: iters must be >= 1, got {iters}")
-    e = (
-        stream.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    eu = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    small = _try_small_lpa(eu, iters, small_input_rows)
-    if small is not None:
-        return small
-
-    from pyspark.sql import Observation
-
-    obs_e = Observation()
-    eu = eu.observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint()
-
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), int(obs_e.get["n"]) // 500_000 + 1))
-
-    labels = (
-        eu.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint()
-    )
-    # start the free chain at the initial checkpoint so round 1 releases
-    # it once `nxt` lands (ADVICE r13: it leaked one |V|-row storage
-    # block per call until GC; BFS already frees its initial dist)
-    prev_ckpt = labels
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        for i in range(iters):
-            # neighbor labels arrive at dst; (dst, lbl) partial-agg
-            # count, then the argmax fold: max(struct(cnt, -lbl)) is
-            # most-frequent-then-SMALLEST-label without a window sort
-            cnt = (
-                eu.join(labels, eu["src"] == labels["id"])
-                .select(F.col("dst").alias("vid"), "lbl")
-                .groupBy("vid", "lbl")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            pick = cnt.groupBy("vid").agg(
-                (-F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl")))["nl"])
-                .alias("new_lbl")
-            )
-            obs = Observation()
-            nxt = (
-                labels.join(pick, labels["id"] == pick["vid"], "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
-                    (
-                        F.coalesce(F.col("new_lbl"), F.col("lbl"))
-                        != F.col("lbl")
-                    ).alias("_chg"),
-                )
-                .observe(obs, F.count_if(F.col("_chg")).alias("chg"))
-                .select("id", "lbl")
-                .localCheckpoint()
-            )
-            changed = int(obs.get["chg"])
-            # every round checkpoints: the changed-label Observation
-            # needs a per-round action anyway (no cadence knob — unlike
-            # pagerank, whose convergence is not observed, LPA's early
-            # exit rides this job); free the superseded checkpoint once
-            # its successor landed
-            if prev_ckpt is not None:
-                free_checkpoint(prev_ckpt)
-            prev_ckpt = nxt
-            labels = nxt
-            if changed == 0:
-                break  # synchronous LPA is idempotent from here on
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        free_checkpoint(eu)
-    return labels.select("id", "lbl")
+    return _lpa(stream, iters, small_input_rows, weight_col)

@@ -21,21 +21,31 @@ scoring over a link graph).
 materialized ONCE (one agg + one co-keyed join, then localCheckpoint);
 each iteration is one src-keyed join against the |V|-row rank table,
 one dst-keyed partial/final sum, and one left join back to the vertex
-set — three keyed shuffles over monotonically |V|-bounded data, with
-the rank table checkpointed per round so the plan depth stays O(1)
-however many iterations run. Shuffle width is right-sized to the
-measured edge count exactly as the CC loop does (32-way exchanges on a
-1k-vertex snapshot are pure task overhead; the conf is restored in
-``finally``).
+set — three keyed shuffles over monotonically |V|-bounded data. The
+loop is a ``loop.supersteps`` loop: the rank table checkpoints every
+4th round and after the last, so the plan depth stays bounded however
+many iterations run, and the shuffle width follows the measured edge
+count with AQE off at ≤4 partitions. Small graphs take the
+exact-rational driver fast path (``loop.try_driver``).
 """
 
 from __future__ import annotations
 
+import collections
+from fractions import Fraction
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.algos.loop import supersteps, try_driver
 from gelly_streaming_spark.operators.graphstream import GraphStream
 from gelly_streaming_spark.plans.memory import free_checkpoint
+
+_NO_SOURCES = (
+    "pagerank: sources is empty (or disjoint from the graph) "
+    "— personalized teleport mass is undefined"
+)
 
 
 def _round_pr_exact(fr) -> float:
@@ -57,64 +67,30 @@ def _round_pr_exact(fr) -> float:
     )
 
 
-def _try_small_pagerank(
-    e_plan: DataFrame,
-    iters: int,
-    damping: float,
-    sources: DataFrame | None,
-    small_input_rows: int,
-) -> DataFrame | None:
-    """Adaptive small-graph fast path (the CC/BFS/LPA/k-core/HITS
-    doctrine — VERDICT r15 item 5): one bounded Arrow collect of the
-    distinct directed edges, then driver-local power iteration in EXACT
-    rational arithmetic (``fractions.Fraction``): damping enters as the
-    exact binary value of the double literal the distributed plan uses,
-    teleport and 1/n are exact rationals, so the iterated rank is the
-    true real number the JVM doubles approximate to ~1e-13. The output
-    rounding (9dp→6dp HALF_UP, ``_round_pr_exact``) therefore lands on
-    the same 6dp value as both the distributed plan and the DuckDB
-    unrolled replica wherever the measured 9dp margins (≥4.5e-11 raw)
-    hold — bit-safe by construction, no float-summation-order hazard at
-    all. The r15 loop-tax decomposition (q72/q73) measured ~80% of a
-    3-round distributed loop on a ~1k-vertex snapshot as fixed
-    job/checkpoint floors; the driver loop removes every one of them.
-    Spills over the row bound -> None (caller runs the distributed
-    loop; tests force it with ``small_input_rows=0``)."""
-    if small_input_rows <= 0:
-        return None
-    import collections
-    from fractions import Fraction
-
-    import pandas as pd
-
-    from gelly_streaming_spark.plans.probe import bounded_take
-
-    tbl = bounded_take(e_plan, small_input_rows, as_arrow=True)
-    if tbl.num_rows > small_input_rows:
-        return None
+def _pagerank_kernel(iters: int, damping: float, tbl, stbl=None) -> list[tuple]:
+    """Driver kernel: power iteration in EXACT rational arithmetic
+    (``fractions.Fraction``). Damping enters as the exact binary value of
+    the double literal the distributed plan uses, and teleport and 1/n
+    are exact rationals, so the iterated rank is the true real number
+    the JVM doubles approximate to ~1e-13. The output rounding
+    (``_round_pr_exact``) therefore lands on the same 6dp value as the
+    distributed plan and the DuckDB unrolled replica wherever the
+    measured 9dp margins (≥4.5e-11 raw) hold — no float-summation-order
+    hazard at all. Given a second table, its ids are the teleport
+    sources."""
     edges = list(
         zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist())
     )
     if not edges:
-        return None  # caller's n == 0 branch owns the empty contract
+        return []
     verts = sorted({u for u, _ in edges} | {v for _, v in edges})
     n = len(verts)
     tele: dict | None = None
-    if sources is not None:
-        stbl = bounded_take(
-            sources.select(F.col(sources.columns[0]).alias("id")).distinct(),
-            small_input_rows,
-            as_arrow=True,
-        )
-        if stbl.num_rows > small_input_rows:
-            return None
+    if stbl is not None:
         vset = set(verts)
         srcs = {x for x in stbl.column("id").to_pylist() if x in vset}
         if not srcs:
-            raise ValueError(
-                "pagerank: sources is empty (or disjoint from the graph) "
-                "— personalized teleport mass is undefined"
-            )
+            raise ValueError(_NO_SOURCES)
         t_on = Fraction(1, len(srcs))
         tele = {v: (t_on if v in srcs else Fraction(0)) for v in verts}
     d = Fraction(damping)  # exact binary value of the plan's double literal
@@ -134,29 +110,13 @@ def _try_small_pagerank(
             r = {v: base + d * sums[v] for v in verts}
         else:
             r = {v: one_minus_d * tele[v] + d * sums[v] for v in verts}
-    pdf = pd.DataFrame(
-        [(v, _round_pr_exact(r[v])) for v in verts], columns=["id", "pr"]
-    )
-    # Schema derived from the input (VERDICT r16 #3): the distributed
-    # loop's `id` inherits the edge src/dst type, so a hard-coded
-    # `id long` would return a DIFFERENT schema on the fast path for a
-    # non-long-id graph (string ids, int32 ids) than the scale path.
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("id", e_plan.schema["src"].dataType, True),
-            StructField("pr", DoubleType(), True),
-        ]
-    )
-    return e_plan.sparkSession.createDataFrame(pdf, schema)
+    return [(v, _round_pr_exact(r[v])) for v in verts]
 
 
 def pagerank(
     stream: GraphStream,
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
     sources: DataFrame | None = None,
     small_input_rows: int = 100_000,
     stats: dict | None = None,
@@ -166,46 +126,40 @@ def pagerank(
     certified cross-engine contract; margins measured in the q56
     docstring).
 
-    ``checkpoint_every`` is the lineage-cut cadence: each uncheckpointed
-    round deepens the plan by two joins and one aggregate, which
-    Catalyst absorbs comfortably for a handful of rounds, while every
-    localCheckpoint is an eager materialization job — at the default
-    cadence a 3-iteration run pays ZERO mid-loop materializations (the
-    r12 bench decomposition: per-round checkpoints made job-floor
-    overhead ~60% of q56's cold cost at local[32]); a 100-round run
-    still cuts every 4th round so plan depth stays bounded. The final
-    rank table is always checkpointed — the returned plan must not
-    reference the loop-invariant checkpoints the ``finally`` releases.
+    The distributed loop cuts lineage every 4th round: each uncut round
+    deepens the plan by two joins and one aggregate, which Catalyst
+    absorbs comfortably for a handful of rounds, while every
+    localCheckpoint is an eager materialization job — a 3-iteration
+    run pays ZERO mid-loop materializations. The final rank table is
+    always checkpointed — the returned plan must not reference the
+    loop-invariant checkpoints the loop releases.
 
-    ``sources`` (r14, VERDICT r13 item 7): PERSONALIZED PageRank — the
-    teleport mass concentrates uniformly on the given source vertex set
-    (first column, intersected with the graph's vertices) instead of
-    all vertices: init r0 = tele, per step
-    ``r'(v) = (1-d)·tele(v) + d·Σ r(u)/outdeg(u)`` with ``tele(v) =
-    1/|S|`` on sources, 0 elsewhere — the random-walk-with-restart
-    similarity underlying seed-based curation (find pages 'near' a
-    trusted seed set). One extra |V|-row teleport column carried on the
-    checkpointed vertex table; the loop shape is unchanged. With
-    ``sources=None`` the original uniform path (and its certified q56
-    plan) runs verbatim.
+    ``sources``: PERSONALIZED PageRank — the teleport mass concentrates
+    uniformly on the given source vertex set (first column, intersected
+    with the graph's vertices) instead of all vertices: init r0 = tele,
+    per step ``r'(v) = (1-d)·tele(v) + d·Σ r(u)/outdeg(u)`` with
+    ``tele(v) = 1/|S|`` on sources, 0 elsewhere — the
+    random-walk-with-restart similarity underlying seed-based curation
+    (find pages 'near' a trusted seed set). One extra |V|-row teleport
+    column carried on the checkpointed vertex table; the loop shape is
+    unchanged. With ``sources=None`` the uniform path (and its certified
+    q56 plan) runs.
 
     Graphs whose distinct edge list fits ``small_input_rows`` run the
-    driver-local exact-rational fast path (``_try_small_pagerank`` —
-    bounded-collect doctrine, bit-safe rounding by construction); the
-    distributed loop below is the scale path, forced in tests with
-    ``small_input_rows=0``."""
+    driver-local exact-rational fast path; the distributed loop below is
+    the scale path, forced with ``small_input_rows=0``. ``stats``, if
+    given, receives ``{"fast_path": bool}`` — the q56d distributed-path
+    certification asserts on it."""
     if iters < 1:
         raise ValueError(f"pagerank: iters must be >= 1, got {iters}")
-    if checkpoint_every < 1:
-        raise ValueError(f"pagerank: checkpoint_every must be >= 1, got {checkpoint_every}")
     e_plan = stream.edges.select("src", "dst").distinct()
-    small = _try_small_pagerank(
-        e_plan, iters, damping, sources, small_input_rows
+    side = () if sources is None else (
+        sources.select(F.col(sources.columns[0]).alias("id")).distinct(),
     )
-    # ``stats``, if given, receives {"fast_path": bool} — the q56d
-    # distributed-path certification asserts on it (the q15d convention:
-    # the cert query must FAIL LOUDLY if a future change lets the fast
-    # path swallow small_input_rows=0).
+    small = try_driver(
+        e_plan, small_input_rows, partial(_pagerank_kernel, iters, damping),
+        "id {id}, pr double", *side,
+    )
     if stats is not None:
         stats["fast_path"] = small is not None
     if small is not None:
@@ -219,97 +173,72 @@ def pagerank(
     )
     n = verts.count()
     if n == 0:
-        # Empty edge stream: 1/n and (1-d)/n are undefined. Return the
-        # empty (id, pr) frame instead of an opaque ZeroDivisionError
-        # (ADVICE r12) — the checkpoints just created are freed since
-        # nothing downstream will reference them.
+        # Empty edge stream: 1/n and (1-d)/n are undefined — return the
+        # empty (id, pr) frame; nothing downstream reads the checkpoints.
         free_checkpoint(e)
         free_checkpoint(verts)
         return verts.select(
             F.col("id"), F.lit(0.0).alias("pr")
         ).where(F.lit(False))
-    sess_conf = stream.edges.sparkSession.conf
-    old_parts = sess_conf.get("spark.sql.shuffle.partitions")
-    old_aqe = sess_conf.get("spark.sql.adaptive.enabled")
-    loop_parts = max(1, min(int(old_parts), e.count() // 500_000 + 1))
-    eo = None
-    ranks = None
-    vt = verts
-    try:
-        sess_conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        if loop_parts <= 4:
-            sess_conf.set("spark.sql.adaptive.enabled", "false")
+    held = [e, verts]
+    eo = vt = None
+    base = (1.0 - damping) / n
+
+    def setup() -> DataFrame:
+        # runs at the loop's shuffle width
+        nonlocal eo, vt
         od = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
         eo = e.join(od, "src").localCheckpoint()  # loop-invariant
-        if sources is not None:
-            s = (
-                sources.select(F.col(sources.columns[0]).alias("id"))
-                .distinct()
-                .join(verts, "id", "left_semi")
-            )
-            ns = s.count()
-            if ns == 0:
-                raise ValueError(
-                    "pagerank: sources is empty (or disjoint from the graph) "
-                    "— personalized teleport mass is undefined"
-                )
-            # teleport column rides the checkpointed vertex table; the
-            # per-round left join below reads vt either way, so the
-            # personalized loop costs no extra shuffle
-            vt = verts.join(
-                s.withColumn("_s", F.lit(True)), "id", "left"
-            ).select(
-                "id",
-                F.when(F.col("_s"), F.lit(1.0 / ns))
-                .otherwise(F.lit(0.0))
-                .alias("tele"),
-            ).localCheckpoint()
-        base = (1.0 - damping) / n
-        ranks = (
-            verts.withColumn("r", F.lit(1.0 / n))
-            if sources is None
-            else vt.select("id", F.col("tele").alias("r"))
+        held.append(eo)
+        vt = verts
+        if sources is None:
+            return verts.withColumn("r", F.lit(1.0 / n))
+        s = side[0].join(verts, "id", "left_semi")
+        ns = s.count()
+        if ns == 0:
+            raise ValueError(_NO_SOURCES)
+        # teleport column rides the checkpointed vertex table; the
+        # per-round left join reads vt either way, so the personalized
+        # loop costs no extra shuffle
+        vt = verts.join(
+            s.withColumn("_s", F.lit(True)), "id", "left"
+        ).select(
+            "id",
+            F.when(F.col("_s"), F.lit(1.0 / ns))
+            .otherwise(F.lit(0.0))
+            .alias("tele"),
+        ).localCheckpoint()
+        held.append(vt)
+        return vt.select("id", F.col("tele").alias("r"))
+
+    def step(ranks: DataFrame, _i: int) -> DataFrame:
+        contribs = eo.join(ranks, eo["src"] == ranks["id"]).select(
+            F.col("dst").alias("id"), (F.col("r") / F.col("deg")).alias("c")
         )
-        prev_ckpt = None  # the superseded rank checkpoint, freed after its successor lands
-        for i in range(iters):
-            contribs = eo.join(ranks, eo["src"] == ranks["id"]).select(
-                F.col("dst").alias("id"), (F.col("r") / F.col("deg")).alias("c")
-            )
-            sums = contribs.groupBy("id").agg(F.sum("c").alias("s"))
-            propagated = F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-            new = vt.join(sums, "id", "left").select(
-                "id",
+        sums = contribs.groupBy("id").agg(F.sum("c").alias("s"))
+        propagated = F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+        return vt.join(sums, "id", "left").select(
+            "id",
+            (
                 (
-                    (
-                        F.lit(base)
-                        if sources is None
-                        else F.lit(1.0 - damping) * F.col("tele")
-                    )
-                    + propagated
-                ).alias("r"),
-            )
-            if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-                new = new.localCheckpoint()
-                if prev_ckpt is not None:
-                    # the fresh checkpoint no longer reads the old one
-                    free_checkpoint(prev_ckpt)
-                prev_ckpt = new
-            ranks = new
-    finally:
-        sess_conf.set("spark.sql.shuffle.partitions", old_parts)
-        sess_conf.set("spark.sql.adaptive.enabled", old_aqe)
-        free_checkpoint(e)
-        if eo is not None:
-            free_checkpoint(eo)
-        # verts (and the personalized teleport table) stay referenced by
-        # nothing downstream; the returned plan reads only the final
-        # ranks checkpoint. Inside finally (ADVICE r14): an exception
-        # mid-loop otherwise leaks both |V|-row checkpoints until GC.
-        # vt is verts until the personalized table lands, so the guard
-        # also covers an exception before that checkpoint exists.
-        free_checkpoint(verts)
-        if vt is not verts:
-            free_checkpoint(vt)
+                    F.lit(base)
+                    if sources is None
+                    else F.lit(1.0 - damping) * F.col("tele")
+                )
+                + propagated
+            ).alias("r"),
+        )
+
+    ranks = supersteps(
+        setup,
+        step,
+        iters,
+        block=4,
+        width=(e.sparkSession, e.count()),
+        aqe_off=True,
+        held=held,
+        free_init=False,
+    )
     # Double-round (9dp then 6dp), matched verbatim in the oracles: a
     # concentrated teleport produces near-dyadic ranks landing EXACTLY
     # on 6dp boundaries (0.0053125 at q68/sf0.001), where a ~1-ulp

@@ -21,7 +21,7 @@ from gelly_streaming_spark.operators.graphstream import GraphStream
 def intersect_difference(
     left_stream: GraphStream,
     other: GraphStream,
-    assume_distinct: bool = False,
+    assume_both_distinct: bool = False,
     marker: str = "in_both",
 ) -> GraphStream:
     """Fused INTERSECT + EXCEPT in ONE probe: every left edge comes back
@@ -39,10 +39,12 @@ def intersect_difference(
     Same distinctness/null contract as ``GraphStream.intersect``, with
     one addition: a LEFT join (unlike a semi-join) multiplies rows on
     right-side duplicates, so the right side is also deduplicated unless
-    ``assume_distinct`` declares both sides sets already."""
+    ``assume_both_distinct`` declares both sides sets already (unlike
+    ``GraphStream.intersect``'s ``assume_distinct``, which concerns only
+    the left side)."""
     left = left_stream.edges.select("src", "dst")
     right = other.edges.select("src", "dst")
-    if not assume_distinct:
+    if not assume_both_distinct:
         left = left.dropDuplicates(["src", "dst"])
         right = right.dropDuplicates(["src", "dst"])
     marked = left.join(

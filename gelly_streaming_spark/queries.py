@@ -295,7 +295,7 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     + "SELECT 'intersect' AS which, src, dst FROM (SELECT * FROM a INTERSECT SELECT * FROM b) "
     + "UNION ALL SELECT 'except', src, dst FROM (SELECT * FROM a EXCEPT SELECT * FROM b)",
     "set-op extension (absent in reference): INTERSECT / EXCEPT as "
-    "semi/anti joins — assume_distinct skips the dedup shuffle because "
+    "semi/anti joins — assume_both_distinct skips the dedup shuffle because "
     "both inputs filter the already-distinct materialized view", memo_plan=True)
 def q11b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct co-purchase projection feeds both set-op sides:
@@ -308,7 +308,7 @@ def q11b(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = E.copart_canonical(spark, sf_dir)
     a = GraphStream(e.where(F.col("src") % 2 == 0))
     b = GraphStream(e.where(F.col("dst") % 3 == 0))
-    return intersect_difference(a, b, assume_distinct=True).edges.select(
+    return intersect_difference(a, b, assume_both_distinct=True).edges.select(
         F.when(F.col("in_both"), F.lit("intersect"))
         .otherwise(F.lit("except"))
         .alias("which"),

@@ -7,11 +7,17 @@ import pyspark.sql.functions as F
 import pytest
 
 from gelly_streaming_spark import GraphStream
-from gelly_streaming_spark.algos.bipartiteness import bipartiteness_check
+from gelly_streaming_spark.algos.bfs import bfs_distances
+from gelly_streaming_spark.algos.bipartiteness import bipartiteness_check, odd_vertex_reach
 from gelly_streaming_spark.algos.connected_components import (
     connected_components,
+    connected_components_alternating,
     connected_components_summary,
 )
+from gelly_streaming_spark.algos.hits import hits
+from gelly_streaming_spark.algos.kcore import k_core
+from gelly_streaming_spark.algos.lpa import label_propagation, weighted_label_propagation
+from gelly_streaming_spark.algos.pagerank import pagerank
 from gelly_streaming_spark.algos.spanner import spanner
 from gelly_streaming_spark.algos.triangles import (
     triangle_count,
@@ -20,6 +26,8 @@ from gelly_streaming_spark.algos.triangles import (
 )
 from gelly_streaming_spark.sources.edges import edges_copart
 from gelly_streaming_spark.sources.fixtures import fixture_graph, g5_powerlaw
+
+pytestmark = pytest.mark.algos
 
 
 def test_cc_g4(spark):
@@ -553,3 +561,48 @@ def test_lpa_triangle_converges_and_early_exit(spark):
     )
     out = {r.id: r.lbl for r in label_propagation(loops, 2).collect()}
     assert set(out) == {2, 3}
+
+
+# Every iterative entry point, called as run(stream, sources, graph-tagged
+# edges, small_input_rows).
+_PATHS = {
+    "connected_components": lambda gs, src, tg, n: connected_components(gs, small_input_rows=n),
+    "connected_components_alternating":
+        lambda gs, src, tg, n: connected_components_alternating(gs, small_input_rows=n),
+    # no fast path: both calls run the loop (string ids crashed it)
+    "bipartiteness_check": lambda gs, src, tg, n: bipartiteness_check(gs, return_labels=True)[0],
+    "odd_vertex_reach": lambda gs, src, tg, n: odd_vertex_reach(tg, small_input_rows=n),
+    "hits": lambda gs, src, tg, n: hits(gs, small_input_rows=n),
+    "bfs_distances": lambda gs, src, tg, n: bfs_distances(gs, src, small_input_rows=n),
+    "k_core": lambda gs, src, tg, n: k_core(gs, small_input_rows=n),
+    "label_propagation": lambda gs, src, tg, n: label_propagation(gs, small_input_rows=n),
+    "weighted_label_propagation":
+        lambda gs, src, tg, n: weighted_label_propagation(gs, small_input_rows=n),
+    "pagerank": lambda gs, src, tg, n: pagerank(gs, small_input_rows=n),
+    "pagerank_personalized": lambda gs, src, tg, n: pagerank(gs, sources=src, small_input_rows=n),
+}
+_ID_TYPES = {  # edge DDL, id of a letter
+    "long": ("src long, dst long", ord),
+    "string": ("src string, dst string", str),
+    "int_long": ("src int, dst long", ord),
+}
+
+
+@pytest.mark.parametrize("id_type", list(_ID_TYPES))
+@pytest.mark.parametrize("entry", list(_PATHS))
+def test_paths_agree_for_every_id_type(spark, entry, id_type):
+    """The driver fast path and the distributed loop return the same
+    schema and rows for every id type; the fast path's id type is what
+    src ∪ dst widens to, like the distributed path's."""
+    ddl, vid = _ID_TYPES[id_type]
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
+    df = spark.createDataFrame(
+        [(vid(a), vid(b), 1.5) for a, b in edges], ddl + ", val double"
+    )
+    src = spark.createDataFrame([(vid("a"),)], ddl.split(",")[0].replace("src", "id"))
+    tagged = df.select(F.lit("g").alias("graph"), "src", "dst")
+    run = _PATHS[entry]
+    fast = run(GraphStream(df), src, tagged, 100_000)
+    dist = run(GraphStream(df), src, tagged, 0)
+    assert fast.schema == dist.schema, (fast.schema, dist.schema)
+    assert sorted(fast.collect()) == sorted(dist.collect())

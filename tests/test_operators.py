@@ -159,7 +159,7 @@ def test_intersect_difference_fused_matches_pair(spark):
     set exactly as the separate semi-join intersect / anti-join
     difference pair does — including right-side DUPLICATES (a left join
     multiplies on them unless the operator dedups) and the
-    assume_distinct fast path."""
+    assume_both_distinct fast path."""
     left = GraphStream(spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (4, 5)], "src long, dst long"))
     # (1, 2) duplicated on the right: must still tag once, not multiply
@@ -177,10 +177,10 @@ def test_intersect_difference_fused_matches_pair(spark):
     assert got_out == want_out == {(1, 3), (4, 5)}
     assert fused.count() == 4  # one row per left edge, no dup blowup
 
-    # assume_distinct path over genuinely-distinct inputs
+    # assume_both_distinct path over genuinely-distinct inputs
     ld = GraphStream(left.edges.dropDuplicates(["src", "dst"]))
     rd = GraphStream(right.edges.dropDuplicates(["src", "dst"]))
-    fused2 = intersect_difference(ld, rd, assume_distinct=True).edges
+    fused2 = intersect_difference(ld, rd, assume_both_distinct=True).edges
     assert {(r.src, r.dst, r.in_both) for r in fused2.collect()} == {
         (r.src, r.dst, r.in_both) for r in fused.collect()
     }
